@@ -5,16 +5,17 @@ driver process on ``local[nproc]``.
 
 Run from the root of a checkout. One run:
 
-1. writes seed-permuted copies of the tables under ``.perfbench_work/``;
-2. starts the session and builds the workload's caches (``SETUP_ROUNDS``
-   times over fresh copies, keeping the last), spins up the Python
-   worker pool and runs warm-up passes, the first of which collects
-   every query's output for the oracle check;
+1. writes a seed-permuted copy of the sf0.01 tables in ``perfbench/data``
+   under ``.perfbench_work/``;
+2. starts the session, builds the workload's graph caches, spins up the
+   Python worker pool and runs one warm-up pass that collects every
+   query's output for the oracle check;
 3. runs a fixed number of timed passes over the workload's query list,
    sized from ``--seconds``;
-4. checks the collected outputs against the DuckDB oracle twins, outside
-   all timing, and prints one JSON line: end-to-end metrics with
-   ``--trace 0``, per-layer metrics with ``--trace 1``.
+4. runs one more collecting pass, checks both collected outputs of each
+   query against its DuckDB oracle twin, outside all timing, and prints
+   one JSON line: end-to-end metrics with ``--trace 0``, per-layer
+   metrics with ``--trace 1``.
 
 perfbench/README.md explains the workloads, metrics and posture.
 """
@@ -34,30 +35,28 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
-# Row counts relative to TPC-H sf1 (0.01: 15k orders, 60k lineitems,
-# 10k events, 500 documents, 500 vectors); see README for the choice.
-SCALE = 0.01
-SETUP_ROUNDS = 2
-WARM_PASSES = 1
-DRIVER_MEM = "2g"  # also the initial, pre-touched heap: it never resizes
+# The project's sf0.01 test tables (15k orders, 60k lineitems, 10k
+# events, 500 documents, 500 vectors); see README for the choice of scale.
+DATA = os.path.join(HERE, "data")
+DRIVER_MEM = "2g"  # also the initial heap size, so the heap never resizes
+# Nominal seconds of one warm pass on a 4-core box: --seconds / PASS_S
+# passes are timed, at least 3.
+PASS_S = 4.0
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
 
 # name -> (queries, graph builders whose caches set-up warms, whether the
-# queries run Python workers, whose pool set-up then starts, nominal
-# seconds per warm pass on a 4-core box)
+# queries run Python workers, whose pool set-up then starts)
 WORKLOADS = {
     "graph_loops": (
         ["cc_cs", "lpa_cs"],
         ["customer_supplier_graph", "customer_supplier_undirected_graph"],
         False,
-        4.0,
     ),
     "llm_pipeline": (
         ["pretrain_funnel", "ann_topk_lsh"],
         [],
         True,
-        5.5,
     ),
 }
 CLK_TCK = os.sysconf("SC_CLK_TCK")
@@ -174,11 +173,11 @@ class Run:
         self.args = args
         self.work = work
         self.cores = cores
-        self.queries, self.builders, self.python_workers, self.pass_s = WORKLOADS[args.workload]
+        self.queries, self.builders, self.python_workers = WORKLOADS[args.workload]
         self.pid = os.getpid()
         self.executions: dict[str, int] = {}
         self.failed: dict[str, int] = {}
-        self.outputs: dict[str, object] = {}
+        self.outputs: dict[str, list] = {}  # query -> collected results
         self.tracer = None
         self.jit_s = 0.0  # JIT compiler CPU inside queries
         self.pass_jit_s: list[float] = []
@@ -219,31 +218,14 @@ class Run:
         return statistics.median(samples)
 
     # inputs and caches ------------------------------------------------
-    def write_inputs(self, tag: str, seed: int) -> str:
-        import datagen
-
-        d = os.path.join(self.work, "in", tag)
-        datagen.write_permuted(self.base, d, seed)
-        return d
-
-    def setup_round(self, k: int) -> str:
+    def build_caches(self, d: str) -> None:
+        """Build and materialize the workload's memoized graph caches."""
         from flink_graph_spark.sources import graphs
-        from flink_graph_spark.sources.tables import load_table
 
-        d = self.write_inputs(f"setup{k}", self.args.seed * 1000 + k)
-        for t in TABLES:
-            load_table(self.spark, d, t).write.format("noop").mode("overwrite").save()
         for b in self.builders:
             g = getattr(graphs, b)(self.spark, d)
             g.edges.write.format("noop").mode("overwrite").save()
             g.vertices.write.format("noop").mode("overwrite").save()
-        return d
-
-    def drop_graphs(self, d: str, names) -> None:
-        from flink_graph_spark.sources import graphs
-
-        for b in names:
-            getattr(graphs, b)(self.spark, d).unpersist()
 
     # one query / one pass ---------------------------------------------
     def _run_query(self, name: str, d: str, collect: bool) -> tuple[float, float]:
@@ -260,8 +242,7 @@ class Run:
                 with self.tracer.span("action", name):
                     df.write.format("noop").mode("overwrite").save()
             elif collect:
-                df = fn(self.spark, d)
-                self.outputs[name] = df.toPandas()
+                self.outputs.setdefault(name, []).append(fn(self.spark, d).toPandas())
             else:
                 fn(self.spark, d).write.format("noop").mode("overwrite").save()
         except Exception as e:  # a failing query is reported, never dropped
@@ -297,7 +278,8 @@ class Run:
 
     # oracle check ------------------------------------------------------
     def check(self, d: str) -> dict[str, bool]:
-        """Compare every collected output with its DuckDB twin over ``d``."""
+        """Compare every collected output with its DuckDB twin over ``d``;
+        a query passes only if all its collected outputs match."""
         import duckdb
 
         spec = importlib.util.spec_from_file_location(
@@ -311,13 +293,15 @@ class Run:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet')")
         oracles = self.registry.ORACLE_SQL
         ok = {}
-        for name, sdf in self.outputs.items():
+        for name, sdfs in self.outputs.items():
             try:
-                s_c = cc.canonicalize(sdf)
                 o_c = cc.canonicalize(con.sql(oracles[name]).df())
-                ok[name] = (list(s_c.columns) == list(o_c.columns)
-                            and len(s_c) == len(o_c)
-                            and cc.value_hash(s_c) == cc.value_hash(o_c))
+                ok[name] = True
+                for sdf in sdfs:
+                    s_c = cc.canonicalize(sdf)
+                    ok[name] = ok[name] and (list(s_c.columns) == list(o_c.columns)
+                                             and len(s_c) == len(o_c)
+                                             and cc.value_hash(s_c) == cc.value_hash(o_c))
             except Exception as e:
                 print(f"# CHECK ERROR {name}: {e!r}"[:400], file=sys.stderr)
                 ok[name] = False
@@ -325,6 +309,25 @@ class Run:
                 print(f"# MISMATCH {name}", file=sys.stderr)
         con.close()
         return ok
+
+
+def write_permuted(out_dir: str, seed: int) -> str:
+    """Write every table of ``DATA`` to ``out_dir`` with its rows in a
+    ``seed``-drawn order, split into a ``seed``-drawn number of row
+    groups. All seeds see the same rows, so results must not change."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(seed)
+    os.makedirs(out_dir, exist_ok=True)
+    for name in TABLES:
+        tbl = pq.read_table(os.path.join(DATA, f"{name}.parquet"))
+        perm = rng.permutation(tbl.num_rows)
+        row_group = max(1, tbl.num_rows // int(rng.integers(1, 5)))
+        pq.write_table(tbl.take(pa.array(perm)), os.path.join(out_dir, f"{name}.parquet"),
+                       row_group_size=row_group)
+    return out_dir
 
 
 def stop(run: Run) -> None:
@@ -388,7 +391,7 @@ def main() -> int:
         "MKL_NUM_THREADS": "1",
         "PYSPARK_SUBMIT_ARGS": " ".join([
             f"--driver-java-options '-Djava.io.tmpdir={tmp} -Xms{DRIVER_MEM}"
-            " -XX:+AlwaysPreTouch -XX:-UsePerfData"
+            " -XX:-UsePerfData"
             " -XX:-UseDynamicNumberOfCompilerThreads'",
             f"--conf spark.sql.warehouse.dir={os.path.join(work, 'warehouse')}",
             "--conf spark.ui.retainedJobs=1000000",
@@ -401,15 +404,16 @@ def main() -> int:
 
     tempfile.tempdir = tmp
     sys.path[:0] = [ROOT, HERE]
-    import datagen
 
     run = Run(args, work, cores)
     try:
-        run.base = datagen.base_tables(SCALE)
-        log("tables generated")
+        t = time.perf_counter()
+        run.data_dir = write_permuted(os.path.join(work, "in"), args.seed)
+        datagen_s = time.perf_counter() - t
+        log("inputs written")
         run.start_session()
         log("session started")
-        return measure(run, args, t_start)
+        return measure(run, args, t_start + datagen_s)
     finally:
         stop(run)
         log("stopped")
@@ -421,32 +425,26 @@ def main() -> int:
 
 
 def measure(run: Run, args, t_start: float) -> int:
+    """Set up, time the passes, check and print. ``t_start`` is the
+    process start moved later by the time spent writing the inputs, so
+    ``setup_s`` leaves out the benchmark's own data preparation."""
     box = {"loadavg_before": loadavg()}
-    rounds = []
-    for k in range(SETUP_ROUNDS):
-        t = time.perf_counter()
-        if k:
-            run.drop_graphs(run.data_dir, run.builders)
-            run.evict_scratch()
-        run.data_dir = run.setup_round(k)
-        rounds.append(time.perf_counter() - t)
+    run.build_caches(run.data_dir)
     run.keep = run.persistent_rdds()
-    log(f"caches built, rounds {[round(r, 2) for r in rounds]}")
+    log("caches built")
     if run.python_workers:
         run.spark.range(0, 4 * run.cores, 1, 4 * run.cores).mapInPandas(
             lambda it: it, schema="id long").write.format("noop").mode("overwrite").save()
         log("worker pool up")
     run.run_pass(0, collect=True)
-    for i in range(1, WARM_PASSES):
-        run.run_pass(i)
-    setup_s = time.time() - t_start - sum(rounds) + statistics.median(rounds)
+    setup_s = time.time() - t_start
     box["sched_probe_ms_before"] = run.sched_probe_ms()
     log("set-up done, box probed")
 
     # The pass count follows from --seconds and the nominal pass time, not
     # from the clock: passes keep getting faster as the JIT warms, so a
     # count that varied with box speed would move the median pass.
-    n_passes = max(3, round(args.seconds / run.pass_s))
+    n_passes = max(3, round(args.seconds / PASS_S))
     walls, cpus, traced_walls, untraced_walls = [], [], [], []
     tracer = None
     if args.trace:
@@ -454,8 +452,8 @@ def measure(run: Run, args, t_start: float) -> int:
 
         tracer = Tracer(run.spark, run.cores)
     steal0 = box_steal_ticks()
-    for i in range(WARM_PASSES, WARM_PASSES + n_passes):
-        traced = tracer is not None and (i - WARM_PASSES) % 2 == 0
+    for i in range(1, 1 + n_passes):
+        traced = tracer is not None and i % 2 == 1
         if traced:
             run.tracer = tracer
             tracer.install()
@@ -473,8 +471,10 @@ def measure(run: Run, args, t_start: float) -> int:
     box["steal_frac"] = (steal1[0] - steal0[0]) / max(1, steal1[1] - steal0[1])
     box["sched_probe_ms_after"] = run.sched_probe_ms()
     box["loadavg_after"] = loadavg()
-
     log("timed window done")
+    # a second checked output per query, from after the window, so wrong
+    # results from state carried across passes fail the query too
+    run.run_pass(1 + n_passes, collect=True)
     ok = run.check(run.data_dir)
     log("oracle check done")
     # an execution fails if it raised, or if its query's checked output
@@ -500,10 +500,10 @@ def measure(run: Run, args, t_start: float) -> int:
             "pass_frac": {"value": (attempted - failed_execs) / attempted, "unit": "ratio"},
         }
     box.update(workload=args.workload, seed=args.seed, cores=run.cores,
-               driver_mem=DRIVER_MEM, scale=SCALE, passes=len(walls),
+               driver_mem=DRIVER_MEM, passes=len(walls),
                walls=[round(w, 3) for w in walls], cpus=[round(c, 3) for c in cpus],
-               jit_cpus=[round(j, 3) for j in run.pass_jit_s[WARM_PASSES:]],
-               setup_rounds=[round(r, 3) for r in rounds], failing=bad)
+               jit_cpus=[round(j, 3) for j in run.pass_jit_s[1:1 + n_passes]],
+               failing=bad)
     print("# box " + json.dumps(box))
     print(json.dumps({"correct": not bad, "attempted": attempted,
                       "failed": failed_execs, "metrics": metrics}))
